@@ -18,10 +18,6 @@ from ..schema import load_table
 from .registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- J1: TPC-H Q1-style pricing summary (scan-heavy agg; bench headliner) --
 
 
@@ -43,7 +39,7 @@ def j1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pricing-summary aggregation: full scan + hash-agg on two
     low-cardinality keys.  DECIMAL sums keep it exact (order-free);
     whole-stage codegen covers scan→project→partial-agg."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     dec = lambda c: F.col(c).cast("decimal(18,2)")  # noqa: E731
     return (
         li.where(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
@@ -85,10 +81,10 @@ def j2_star_revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classic star-schema rollup.  customer/nation/region are broadcast
     (dims ≪ fact) so the orders fact never shuffles for the join; the
     only exchange is the final tiny group-by."""
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
     return (
         orders.join(
             F.broadcast(customer), orders.o_custkey == customer.c_custkey
@@ -121,8 +117,8 @@ def j3_semi_customers_with_orders(spark: SparkSession, sf_dir: str) -> DataFrame
     """left_semi = the exact counterpart of the reference's Bloom
     membership test (consultas.py:137-138): "possibly present" with the
     approximation removed.  Build side (distinct keys) broadcasts."""
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         customer.join(orders, customer.c_custkey == orders.o_custkey, "left_semi")
         .groupBy("c_mktsegment")
@@ -145,8 +141,8 @@ def j3_semi_customers_with_orders(spark: SparkSession, sf_dir: str) -> DataFrame
 def j4_anti_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """left_anti = the Bloom filter's "definitely absent" branch made
     exact."""
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         customer.join(orders, customer.c_custkey == orders.o_custkey, "left_anti")
         .select("c_custkey", "c_name", "c_mktsegment")
@@ -179,9 +175,9 @@ def j5_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact-fact (lineitem⋈orders) shuffle join on l_orderkey with a
     broadcast customer filter, then top-k.  At 100 TB: both facts hash
     to the same partitioning of orderkey; AQE handles skewed orders."""
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     rev = (
         F.col("l_extendedprice").cast("decimal(18,2)")
         * (F.lit(1) - F.col("l_discount")).cast("decimal(18,2)")
@@ -236,7 +232,7 @@ def j6_range_join_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     (random_walk_utils.py:23-29).  The band table is broadcast, so the
     theta predicate evaluates map-side (BroadcastNestedLoopJoin) without
     shuffling the fact."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     bands = spark.range(0, 20).select(
         F.col("id").cast("int").alias("band_id"),
         (F.col("id") * 50).cast("double").alias("lo"),
@@ -281,8 +277,8 @@ def j7_left_join_order_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-customer order counts pre-aggregate BEFORE the join, so the
     join's build side is |customers| not |orders| — the
     aggregate-pushdown pattern that matters at fact-table scale."""
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     oc = orders.groupBy(F.col("o_custkey")).agg(F.count("*").alias("n"))
     return (
         customer.join(oc, customer.c_custkey == oc.o_custkey, "left")
@@ -321,7 +317,7 @@ def j8_full_outer_daily_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     series (days may exist in either side only).  Both sides are
     pre-aggregated to |days| rows before the join — the full-outer
     shuffle carries day-level rows, never raw events."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     day = F.date_trunc("day", F.col("ts"))
     c = (
         ev.where(F.col("event_type") == "click")
@@ -365,7 +361,7 @@ def j9_argmin_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppkey))``: partial aggregation collapses each partition's
     lineitems map-side, no join against a min-subquery needed; ties
     break to the lowest suppkey via the struct's second field."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     price = F.col("l_extendedprice").cast("decimal(18,2)")
     return (
         li.where(F.col("l_partkey") < 500)
@@ -407,8 +403,8 @@ def j10_promo_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate over a broadcast lineitem⋈part join.  The date filter
     pushes to the scan; the ratio divides two exact DECIMAL sums so
     only the final division is floating."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     rev = (
         F.col("l_extendedprice").cast("decimal(18,2)")
         * (F.lit(1) - F.col("l_discount")).cast("decimal(18,2)")
@@ -456,7 +452,7 @@ def j11_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (date range, BETWEEN on discount, quantity bound) pushes to the
     parquet scan, so the whole query is one codegen'd scan stage with
     a scalar DECIMAL sum.  The canonical 'is pushdown working' probe."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.where(
             (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
@@ -503,11 +499,11 @@ def j12_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi join never duplicates orders, so no post-join distinct is
     needed; the date-range filter on orders pushes to its scan and
     shrinks the build side before the shuffle."""
-    orders = _t(spark, sf_dir, "orders").where(
+    orders = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     hit = orders.join(
         li,
         (F.col("o_orderkey") == F.col("l_orderkey"))
@@ -552,15 +548,15 @@ def j13_big_order_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate-then-join ordering is the whole point at scale (joining
     first would shuffle the full fact table twice).  DECIMAL sum keeps
     the HAVING threshold exact under any partial-agg order."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("q"))
         .where(F.col("q") > 250)
         .select("l_orderkey", F.round(F.col("q").cast("double"), 6).alias("total_qty"))
     )
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
     return (
         big.join(orders, big.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -602,11 +598,11 @@ def j14_returnflag_priority_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter prunes lineitem at the scan; the join shuffles both sides on
     orderkey (fact-fact SMJ under AQE) and the conditional aggregation
     is codegen'd CASE arithmetic."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
     )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     hi = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -644,7 +640,7 @@ def j15_above_brand_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar subqueries; declaring it directly keeps the plan explicit."""
     from pyspark.sql import Window
 
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     w = Window.partitionBy("p_brand")
     return (
         part.withColumn("brand_avg", F.avg("p_retailprice").over(w))
@@ -686,7 +682,7 @@ def sk1_salted_cohort_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     spread across 8 reducers instead of one."""
     from ..functions.salt import salted_join
 
-    ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "value")
+    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
     dim = (
         ev.select("user_id").distinct()
         .withColumn("cohort", F.col("user_id") % 10)
@@ -751,7 +747,7 @@ def j28_banded_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     invisible.  With 50 windows a broadcast would also do — banding
     is the both-sides-large path (e.g. sessions x incidents at 100 TB).
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     spans = ev.groupBy(
         "user_id", F.date_trunc("day", "ts").alias("day")
     ).agg(
@@ -951,8 +947,8 @@ def j29_bloom_semijoin_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
     sanctioned shape as k1's bloom and sim5's centroids)."""
     from ..sketches import bloom_params
 
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     dim = orders.where(
         (F.col("o_orderpriority") == "1-URGENT")
         & (F.col("o_orderdate") >= F.lit(_J29_LO).cast("timestamp"))

@@ -28,10 +28,6 @@ from ..schema import load_table
 from .registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- TS1: gap-fill / densification ------------------------------------------
 
 
@@ -74,7 +70,7 @@ def ts1_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the fact is reduced to |days|×|types| rows FIRST; the
     spine/grid/ffill all operate on the tiny aggregate, and the grid
     join broadcasts the spine."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         F.date_trunc("day", "ts").alias("d"), "event_type"
     ).agg(
@@ -152,7 +148,7 @@ def str1_fuzzy_part_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     VALUES, so compare values once however many rows share them).  At
     100 TB the name vocabulary is the model-sized table and the
     row-mapping joins carry well-distributed composite keys."""
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     nm = part.select("p_type", "p_name").distinct()
     x = nm.select("p_type", F.col("p_name").alias("name_a"))
     y = nm.select(F.col("p_type").alias("ty"), F.col("p_name").alias("name_b"))
@@ -211,7 +207,7 @@ def str2_name_prefix_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     part name (regexp_extract group 1 — identical semantics in Spark
     and DuckDB), with a distinct-brand rollup.  The regex evaluates
     JVM-side inside codegen; one shuffle for the group-by."""
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     return (
         part.groupBy(
             F.regexp_extract("p_name", r"^([a-z]+)", 1).alias("name_prefix")
@@ -279,7 +275,7 @@ def cdc1_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     and an aggregation."""
     from pyspark.sql import Window as W
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     ordered = ev.select(
         "user_id",
@@ -365,7 +361,7 @@ def ts2_rolling_median_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolling median and the row-number gate."""
     from pyspark.sql import Window as W
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     q = ev.where(F.col("user_id") < 30).select(
         "user_id",
         "event_id",
@@ -544,7 +540,7 @@ def er1_blocking_and_verify(
     blocked candidate pairs (levenshtein-verified when ``verified``).
     Factored out of er1 so the candidate stage is independently
     measurable; er1's declared result is unchanged."""
-    cust = _t(spark, sf_dir, "customer").select(F.col("c_custkey").alias("k"))
+    cust = load_table(spark, sf_dir, "customer").select(F.col("c_custkey").alias("k"))
     # Count-adaptive block-key length (round 7 — the stress harness
     # measured fixed prefix-4 blocking saturating at 10x sf0.1: with
     # 16^4 blocks, in-block candidate pairs grow ~n^2/65536, exponent
@@ -689,7 +685,7 @@ def ewma1_decay_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     (event_type, day) key space — calendar-bounded model-sized work
     after one linear scan, the same contract as trend2."""
     daily = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy(
             "event_type",
             F.floor(F.unix_timestamp("ts") / 86400).cast("long").alias("d"),
@@ -917,7 +913,7 @@ def hw1_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the only fact-table touch is the first combiner shuffle —
     the ewma1/trend2 contract, now with an exactly-replayed recursion."""
     daily = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy(
             "event_type",
             F.floor(F.unix_timestamp("ts") / 86400).cast("long").alias("d"),
@@ -1125,7 +1121,7 @@ def hw2_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     on |types| model-sized arrays.  Reference analog: the A4 trend
     family (SURVEY §2.3) as an exactly-replayed seasonal forecaster."""
     daily = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy(
             "event_type",
             F.floor(F.unix_timestamp("ts") / 86400).cast("long").alias("d"),

@@ -17,7 +17,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schema import events_stream
+from ..schema import events_stream, table_schema
 from .registry import query
 
 
@@ -426,7 +426,7 @@ def st8_stream_signature_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     (work / "src").mkdir(parents=True)
     shutil.copy(f"{sf_dir}/documents.parquet", work / "src" / "docs.parquet")
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = table_schema(spark, sf_dir, "documents")
     stream = spark.readStream.schema(schema).parquet(str(work / "src"))
 
     shingles = F.expr(

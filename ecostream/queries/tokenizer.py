@@ -20,6 +20,8 @@ merge table — rule by rule, frequency by frequency.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -83,8 +85,16 @@ def _bpe_ckpt_every(spark: SparkSession, est_bytes: int) -> int:
 def _plan_size_bytes(df: DataFrame) -> int:
     """Catalyst's sizeInBytes estimate for ``df`` (file-size-derived
     for a plain scan) — the same statistic the broadcast planner
-    trusts, used here only to gate a checkpoint cadence."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    trusts, used here only to gate a checkpoint cadence.
+
+    The statistic comes through private JVM APIs; if they are missing
+    (no ``_jdf``, as under Spark Connect) or the JVM call fails, either
+    raw or converted by PySpark, this returns 0, which turns the gate
+    off instead of failing the query."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except (AttributeError, Py4JError, PySparkException):
+        return 0
 
 
 def _bpe_oracle(rounds: int) -> str:

@@ -28,10 +28,6 @@ from ..schema import load_table
 from .registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _dec(c) -> "F.Column":
     col = F.col(c) if isinstance(c, str) else c
     return col.cast("decimal(18,2)")
@@ -78,11 +74,11 @@ def j16_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     OR'd pair predicate that cannot be pushed into either single join —
     it evaluates as a residual after both broadcasts.  lineitem⋈orders
     is the only shuffle; supplier/customer/nation broadcast."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nation = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    nation = load_table(spark, sf_dir, "nation")
     nc = nation.select(
         F.col("n_nationkey").alias("nc_key"), F.col("n_name").alias("cust_nation")
     )
@@ -147,13 +143,15 @@ def j17_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension broadcasts and the share is a conditional-DECIMAL-sum
     ratio (only the final division floats).  Adaptation: p_type
     replaces TPC-H's 3-word type string."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
-    part = _t(spark, sf_dir, "part").where(F.col("p_type") == "STANDARD")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderdate"
+    )
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
+    part = load_table(spark, sf_dir, "part").where(F.col("p_type") == "STANDARD")
     nc = nation.select(
         F.col("n_nationkey").alias("nc_key"), F.col("n_regionkey").alias("nc_region")
     )
@@ -214,11 +212,11 @@ def j18_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape (LIKE-filtered part broadcast pruning lineitem, then the
     orders shuffle join, nation rollup) is Q9's.  All arithmetic stays
     DECIMAL until the final round."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").where(F.col("p_name").like("%red%"))
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nation = _t(spark, sf_dir, "nation")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").where(F.col("p_name").like("%red%"))
+    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    nation = load_table(spark, sf_dir, "nation")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     profit = _rev() - F.lit(0.5).cast("decimal(18,2)") * _dec("l_quantity") * _dec(
         "p_retailprice"
     )
@@ -268,13 +266,13 @@ def j19_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast onto the aggregated result.  Top-20 is ordered on the
     exact DECIMAL revenue with c_custkey as tiebreaker, and rounding
     happens only after the LIMIT so both engines pick identical rows."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").where(
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-04-01 00:00:00").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    nation = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
+    nation = load_table(spark, sf_dir, "nation")
     return (
         li.join(
             orders.select("o_orderkey", "o_custkey"),
@@ -321,8 +319,10 @@ def j20_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts non-null keys only, so null-extended rows land in the zero
     bucket.  Two shuffles: custkey agg, then the tiny count-of-counts.
     Adaptation: priority filter replaces TPC-H's comment NOT LIKE."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
-    orders = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_orderpriority")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey")
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_custkey", "o_orderkey", "o_orderpriority"
+    )
     per_cust = (
         cust.join(
             orders,
@@ -364,12 +364,12 @@ def j21_parts_supplier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop.  lineitem stands in for partsupp; s_acctbal < 0 stands in for
     the complaints LIKE.  count(DISTINCT) shuffles once on the group
     keys with distinct-aggregation expansion."""
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    part = _t(spark, sf_dir, "part").where(
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    part = load_table(spark, sf_dir, "part").where(
         (F.col("p_brand") != "Brand#1") & F.col("p_size").isin(1, 5, 9, 13, 17, 21, 25)
     )
     bad = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .where(F.col("s_acctbal") < 0)
         .select("s_suppkey")
     )
@@ -405,8 +405,8 @@ def j22_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem-only disjunction (quantity ∈ [1,11]∪[10,20]∪[20,30]) is
     implied and pushable, but the cross-table residual must evaluate
     post-join — part broadcasts so the whole thing is one scan stage."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     q = F.col("l_quantity")
     clause = (
         (
@@ -471,7 +471,9 @@ def j23_waiting_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     sharing the order's last ship date) count for both, matching the
     oracle exactly since dates are integral.  Adaptation: l_shipdate
     ordering replaces l_receiptdate > l_commitdate."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_suppkey", "l_shipdate"
+    )
     per_supp = li.groupBy("l_orderkey", "l_suppkey").agg(
         F.max("l_shipdate").alias("supp_last")
     )
@@ -479,10 +481,12 @@ def j23_waiting_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("l_shipdate").alias("order_last"),
         F.count_distinct("l_suppkey").alias("n_supp"),
     )
-    orders = _t(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F").select(
-        "o_orderkey"
+    orders = (
+        load_table(spark, sf_dir, "orders")
+        .where(F.col("o_orderstatus") == "F")
+        .select("o_orderkey")
     )
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         per_supp.join(per_order, "l_orderkey")
         .where((F.col("n_supp") >= 2) & (F.col("supp_last") == F.col("order_last")))
@@ -530,11 +534,11 @@ def j24_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     The balance threshold compares DECIMAL-to-DECIMAL (DuckDB's DECIMAL
     AVG is exact), so membership is never decided by a float.
     Adaptation: c_nationkey ∈ set stands in for substring(c_phone,1,2)."""
-    cust = _t(spark, sf_dir, "customer").where(
+    cust = load_table(spark, sf_dir, "customer").where(
         F.col("c_nationkey").isin(1, 3, 5, 7, 9)
     )
     orders = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .where(F.col("o_orderdate") >= F.lit("1999-01-01 00:00:00").cast("timestamp"))
         .select("o_custkey")
     )
@@ -581,7 +585,7 @@ def j25_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     factor (TPC-H's 0.0001/SF literal re-expressed scale-free).  The
     global total is a second tiny aggregate OF THE FIRST aggregate's
     output — no second scan of lineitem — broadcast back over pv."""
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_extendedprice")
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_extendedprice")
     pv = li.groupBy("l_partkey").agg(F.sum(_dec("l_extendedprice")).alias("part_value"))
     tot = pv.agg(
         F.sum("part_value").alias("total_value"), F.count("*").alias("n_parts")
@@ -627,7 +631,7 @@ def j26_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (25-row input — the single-partition window is on the
     AGGREGATED data, never the fact), keeping ALL ties exactly like the
     = (SELECT max(...)) semantics since revenue stays DECIMAL."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-04-01 00:00:00").cast("timestamp"))
     )
@@ -635,7 +639,7 @@ def j26_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(_rev()).alias("total_revenue")
     )
     w = Window.partitionBy()
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         sr.withColumn("max_rev", F.max("total_revenue").over(w))
         .where(F.col("total_revenue") == F.col("max_rev"))
@@ -681,12 +685,18 @@ def j27_excess_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     OF that aggregate, and the comparison cross-multiplies so no
     division happens.  part broadcasts into the lineitem scan; supplier
     and nation broadcast onto the ~|suppliers| result."""
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey", "l_quantity")
-    part = _t(spark, sf_dir, "part").where(F.col("p_name").like("%bolt%")).select(
-        "p_partkey"
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_partkey", "l_suppkey", "l_quantity"
     )
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    part = (
+        load_table(spark, sf_dir, "part")
+        .where(F.col("p_name").like("%bolt%"))
+        .select("p_partkey")
+    )
+    supp = load_table(spark, sf_dir, "supplier").select(
+        "s_suppkey", "s_name", "s_nationkey"
+    )
+    nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     sq = (
         li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("l_suppkey")

@@ -26,10 +26,6 @@ from ..schema import load_table
 from .registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- W4: lag/lead — inter-order gaps per customer ---------------------------
 
 
@@ -53,7 +49,7 @@ def w4_order_gap_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     o_custkey; first/last rows COALESCE to -1 sentinels so the compare
     stays integral.  The custkey filter pushes to the scan (this is a
     per-entity timeline query, not a full-table export)."""
-    orders = _t(spark, sf_dir, "orders").where(F.col("o_custkey") < 100)
+    orders = load_table(spark, sf_dir, "orders").where(F.col("o_custkey") < 100)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return (
         orders.select(
@@ -100,7 +96,7 @@ def w5_balance_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     because the input is a dimension; for a 100 TB fact the scale path
     is approx_percentile cut points + a width_bucket join (no global
     sort)."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     w = Window.orderBy("c_acctbal", "c_custkey")
     bal = F.col("c_acctbal").cast("decimal(18,2)")
     return (
@@ -138,7 +134,7 @@ def w6_price_position(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both are pure rank arithmetic — deterministic under ties without a
     tiebreaker, since equal prices get equal positions.  One shuffle on
     p_brand."""
-    part = _t(spark, sf_dir, "part").where(F.col("p_size") <= 10)
+    part = load_table(spark, sf_dir, "part").where(F.col("p_size") <= 10)
     w = Window.partitionBy("p_brand").orderBy("p_retailprice")
     return (
         part.select(
@@ -177,7 +173,7 @@ def w7_order_shipping_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     the current row as 'last').  (shipdate, linenumber) is a unique
     order within each l_orderkey so both endpoints are deterministic;
     DISTINCT collapses the per-line duplicates to one row per order."""
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_orderkey") < 1000)
+    li = load_table(spark, sf_dir, "lineitem").where(F.col("l_orderkey") < 1000)
     w = (
         Window.partitionBy("l_orderkey")
         .orderBy("l_shipdate", "l_linenumber")
@@ -223,7 +219,7 @@ def w8_weekly_moving_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     global window is over the tiny aggregated series, never the fact.
     The moving average divides an exact DECIMAL running sum by the
     frame's row count, so both engines float only at the division."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.date_trunc("day", "o_orderdate").alias("d")).agg(
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("day_rev")
     )
@@ -401,7 +397,7 @@ def w10_error_run_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition by user_id and order by the unique ingestion id, so ONE
     exchange serves the whole detection; no self-join, no iteration.
     At 100 TB this is the standard sessionless pattern-match plan."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w_all = Window.partitionBy("user_id").orderBy("event_id")
     w_err = Window.partitionBy(
         "user_id", (F.col("event_type") == "error").cast("int")

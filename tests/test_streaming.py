@@ -228,8 +228,8 @@ def test_watermark_drops_late_data(spark, tmp_path):
     base = pd.Timestamp("2024-01-01 10:00:00")
 
     def write(name, rows):
-        # Coerce to µs: pandas defaults to TIMESTAMP(NANOS), which the
-        # session's nanosAsLong conf (set by load_table) reads as INT64.
+        # Coerce to µs: pandas defaults to TIMESTAMP(NANOS), which Spark
+        # reads only under the nanosAsLong conf, and then as INT64.
         pd.DataFrame(
             {
                 "species": [r[0] for r in rows],

@@ -303,6 +303,32 @@ def test_bpe1_ckpt_gate_on_identical_rules(spark):
     assert gated == baseline
 
 
+def test_plan_size_bytes_fails_soft(spark):
+    """The checkpoint gate's size estimate goes through private JVM
+    APIs; when they raise, it reads 0 bytes (gate off) instead of
+    failing bpe1."""
+    from py4j.protocol import Py4JError
+    from pyspark.errors import PySparkException
+
+    from ecostream.queries.tokenizer import _plan_size_bytes
+
+    class RaisingJdf:
+        def __init__(self, exc):
+            self.exc = exc
+
+        @property
+        def _jdf(self):
+            raise self.exc
+
+    for exc in (
+        AttributeError("_jdf"),
+        Py4JError("optimizedPlan does not exist"),
+        PySparkException(message="stats failed"),
+    ):
+        assert _plan_size_bytes(RaisingJdf(exc)) == 0
+    assert _plan_size_bytes(spark.range(10)) > 0
+
+
 def test_uni_viterbi_arrow_matches_fold(spark):
     """The Arrow-batched Viterbi DP (benchmarked alternative to the
     wired _UNI_DP fold; see _uni_viterbi_arrow's docstring) must emit
