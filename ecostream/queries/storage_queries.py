@@ -12,7 +12,9 @@ mutated by the re-layout fails the hash (row identity across layouts).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,13 +45,20 @@ def _agg(df: DataFrame) -> DataFrame:
     )
 
 
+_REGISTERED: set[str] = set()
+
+
 def _workdir(name: str) -> str:
     """Per-process scratch dir: stable within a process (repeated runs
     overwrite instead of accumulating), pid-suffixed so concurrent
-    drivers on one host can't clobber each other's files mid-query."""
-    return os.path.join(
-        tempfile.gettempdir(), f"ecostream_{name}_{os.getpid()}"
-    )
+    drivers on one host can't clobber each other's files mid-query.
+    The path is removed when the interpreter exits, so no run leaves
+    scratch behind on the host."""
+    path = os.path.join(tempfile.gettempdir(), f"ecostream_{name}_{os.getpid()}")
+    if path not in _REGISTERED:
+        _REGISTERED.add(path)
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 @query("s6_compact_roundtrip", oracle=_AGG_ORACLE)

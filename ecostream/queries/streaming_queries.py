@@ -8,17 +8,41 @@ output equals the batch computation over the same data (the
 stream-batch equivalence property the Structured Streaming paper is
 built on — PAPERS.md), the result is deterministic and oracle-checkable
 with plain SQL: DuckDB sees the batch twin.
+
+Each query declares only its dataflow; the lifecycle it runs under —
+drain, RocksDB scope, replay feed, versioned store — comes from
+``ecostream.streaming.ingest``.
 """
 
 from __future__ import annotations
 
-import uuid
+import shutil
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schema import events_stream, table_schema
+from ..schema import events_stream, load_table, normalize_events_ts, table_schema
+from ..streaming.ingest import (
+    drain,
+    drain_to_memory,
+    fold_store,
+    read_agg_store,
+    replay_feed,
+    rocksdb_state_store,
+    store_version,
+)
 from .registry import query
+from .storage_queries import _workdir
+
+
+def _fresh_workdir(name: str) -> Path:
+    """An empty ``_workdir``: a checkpoint or store left by an earlier
+    run in this process would resume that run instead of replaying."""
+    work = Path(_workdir(name))
+    shutil.rmtree(work, ignore_errors=True)
+    work.mkdir(parents=True)
+    return work
 
 
 @query(
@@ -52,18 +76,7 @@ def st1_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cnt",
         )
     )
-    name = f"st1_{uuid.uuid4().hex[:12]}"
-    q = (
-        counts.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain_to_memory(counts, "st1", "complete")[1]
 
 
 @query(
@@ -89,22 +102,8 @@ def st2_stateful_running_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = events_stream(spark, sf_dir)
     sketched = running_sketch(stream.select("event_type", "user_id", "value"))
-    name = f"st2_{uuid.uuid4().hex[:12]}"
-    q = (
-        sketched.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return (
-        spark.table(name)
-        .groupBy("event_type")
-        .agg(F.max("n").alias("n"))
-    )
+    _, out = drain_to_memory(sketched, "st2", "update")
+    return out.groupBy("event_type").agg(F.max("n").alias("n"))
 
 
 @query(
@@ -136,18 +135,7 @@ def st3_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cnt",
         )
     )
-    name = f"st3_{uuid.uuid4().hex[:12]}"
-    q = (
-        counts.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain_to_memory(counts, "st3", "complete")[1]
 
 
 @query(
@@ -202,18 +190,7 @@ def st4_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    name = f"st4_{uuid.uuid4().hex[:12]}"
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain_to_memory(sessions, "st4", "complete")[1]
 
 
 @query(
@@ -260,20 +237,9 @@ def st5_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") <= F.col("p_ts")),
         "inner",
     )
-    name = f"st5_{uuid.uuid4().hex[:12]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _, out = drain_to_memory(joined, "st5", "append")
     return (
-        spark.table(name)
-        .groupBy(F.col("p_user").alias("user_id"))
+        out.groupBy(F.col("p_user").alias("user_id"))
         .agg(F.count("*").alias("n_pairs"))
     )
 
@@ -294,47 +260,23 @@ def st6_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     until the watermark passes its event time, which is what makes
     streaming dedup viable at 100 TB (the reference's at-least-once
     consume, consumer.py:398-423, has no such guard)."""
-    import shutil
-    import tempfile
-    from pathlib import Path
-
-    import os
-
-    # pid-suffixed scratch: concurrent drivers must not clobber each
-    # other's source/checkpoint dirs mid-query.
-    src = Path(tempfile.gettempdir()) / f"ecostream_st6_src_{os.getpid()}"
-    shutil.rmtree(src, ignore_errors=True)
-    src.mkdir(parents=True)
+    src = _fresh_workdir("st6_src")
     shutil.copy(f"{sf_dir}/events.parquet", src / "copy_a.parquet")
     shutil.copy(f"{sf_dir}/events.parquet", src / "copy_b.parquet")
-
-    batch_schema = spark.read.parquet(str(src / "copy_a.parquet")).schema
-    from ..schema import normalize_events_ts
-
+    # Both copies are byte copies of the events table: the catalog
+    # schema reads them.
     stream = normalize_events_ts(
-        spark.readStream.schema(batch_schema).parquet(str(src))
+        spark.readStream.schema(table_schema(spark, sf_dir, "events")).parquet(
+            str(src)
+        )
     )
     deduped = (
         stream.withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "event_type")
     )
-    name = f"st6_{uuid.uuid4().hex[:12]}"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return (
-        spark.table(name)
-        .groupBy("event_type")
-        .agg(F.count("*").alias("n_unique"))
-    )
+    _, out = drain_to_memory(deduped, "st6", "append")
+    return out.groupBy("event_type").agg(F.count("*").alias("n_unique"))
 
 
 @query(
@@ -356,8 +298,6 @@ def st7_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle runs.  At 100 TB the dimension refreshes by swapping the
     static table between micro-batches — the slowly-changing-dimension
     pattern."""
-    from ..schema import load_table
-
     stream = events_stream(spark, sf_dir)
     dim = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
@@ -369,18 +309,7 @@ def st7_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double"), 2
         ).alias("total_value"),
     )
-    name = f"st7_{uuid.uuid4().hex[:12]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain_to_memory(agg, "st7", "complete")[1]
 
 
 _ST8_SHINGLES = """list_distinct(list_transform(
@@ -415,15 +344,8 @@ def st8_stream_signature_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     grows, instead of re-signing the whole corpus per run.  New docs
     cost O(new docs); the LSH bucket join (d3/d3b) then runs against
     the stored signatures."""
-    import shutil
-    import tempfile
-    from pathlib import Path
-
-    import os
-
-    work = Path(tempfile.gettempdir()) / f"ecostream_st8_{os.getpid()}"
-    shutil.rmtree(work, ignore_errors=True)
-    (work / "src").mkdir(parents=True)
+    work = _fresh_workdir("st8")
+    (work / "src").mkdir()
     shutil.copy(f"{sf_dir}/documents.parquet", work / "src" / "docs.parquet")
 
     schema = table_schema(spark, sf_dir, "documents")
@@ -450,17 +372,12 @@ def st8_stream_signature_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     slots = [_slot(p) for p in range(8)]
     sigs = stream.select("doc_id", *slots)
-    q = (
+    drain(
         sigs.writeStream.format("parquet")
         .option("path", str(work / "index"))
         .option("checkpointLocation", str(work / "ckpt"))
         .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.read.parquet(str(work / "index")).orderBy("doc_id")
 
 
@@ -490,24 +407,12 @@ def st9_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys touch (partition pruning on the join), not the whole table —
     or a lake-format MERGE, which is this exact dataflow under a
     transaction log."""
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
-    from ..schema import load_table
-
-    work = Path(tempfile.gettempdir()) / f"ecostream_st9_{os.getpid()}"
-    shutil.rmtree(work, ignore_errors=True)
-    work.mkdir(parents=True)
-
+    work = _fresh_workdir("st9")
     orders = load_table(spark, sf_dir, "orders")
     cols = [
         "o_orderkey", "o_custkey", "o_orderstatus",
         "o_totalprice", "o_orderdate", "o_orderpriority",
     ]
-    base = work / "store_v0"
-    orders.select(*cols).write.parquet(str(base))
 
     deletes = orders.where(F.col("o_orderkey") % 10 == 7).select(
         F.lit("D").alias("op"), *cols
@@ -533,43 +438,29 @@ def st9_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority",
     )
     feed = deletes.unionByName(updates).unionByName(inserts)
-    feed.repartition(4).write.parquet(str(work / "feed"))
 
-    schema = spark.read.parquet(str(work / "feed")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(work / "feed"))
-    )
-
-    state = {"cur": str(base), "v": 0}
-
-    def _apply(batch: DataFrame, _batch_id: int) -> None:
-        store = spark.read.parquet(state["cur"])
+    def _apply(store: DataFrame, batch: DataFrame) -> DataFrame:
         # Anti-join on ALL batch keys (including inserts), not just
-        # D/U: re-applying a batch after a micro-batch retry is then a
-        # no-op (the insert's prior copy is removed before re-insert),
-        # which is what makes the merge genuinely exactly-once rather
-        # than exactly-once-on-a-clean-run.
+        # D/U: re-applying a batch to the same store then yields the
+        # same snapshot (the insert's prior copy is removed before
+        # re-insert) — merge application is idempotent by itself, not
+        # only through the store's batch-id versioning.
         keys = batch.select("o_orderkey")
         kept = store.join(F.broadcast(keys), "o_orderkey", "left_anti")
         ups = batch.where(F.col("op").isin("U", "I")).drop("op")
-        state["v"] += 1
-        nxt = str(work / f"store_v{state['v']}")
-        kept.unionByName(ups).write.mode("overwrite").parquet(nxt)
-        state["cur"] = nxt
+        return kept.unionByName(ups)
 
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", str(work / "ckpt"))
-        .start()
+    store = str(work / "store")
+    drain(
+        fold_store(
+            replay_feed(feed, work),
+            store,
+            str(work / "ckpt"),
+            _apply,
+            orders.select(*cols),
+        )
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    snap = spark.read.parquet(state["cur"])
+    snap = read_agg_store(spark, store)
     return (
         snap.groupBy("o_orderstatus")
         .agg(
@@ -614,14 +505,7 @@ def st10_available_now_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
     after the drain) are flushed; later windows stay in state for the
     next scheduled run.  An engine that eagerly emitted unfinalized
     windows — or dropped them — hash-fails."""
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
-    work = Path(tempfile.gettempdir()) / f"ecostream_st10_{os.getpid()}"
-    shutil.rmtree(work, ignore_errors=True)
-
+    work = _fresh_workdir("st10")
     stream = events_stream(spark, sf_dir)
     counts = (
         stream.withWatermark("ts", "1 hour")
@@ -676,18 +560,13 @@ def st11_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN the oracle runs (sentinel user filtered from both).
     State stays bounded exactly as in st5 — that is the feature."""
     import os
-    import shutil
-    import tempfile
-    from pathlib import Path
 
-    src = Path(tempfile.gettempdir()) / f"ecostream_st11_src_{os.getpid()}"
-    shutil.rmtree(src, ignore_errors=True)
-    src.mkdir(parents=True)
+    src = _fresh_workdir("st11_src")
     shutil.copy(f"{sf_dir}/events.parquet", src / "a_events.parquet")
-    # the raw read needs the legacy conf (ts is TIMESTAMP(NANOS)); do
-    # not rely on an earlier load_table having set it in this session
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch = spark.read.parquet(str(src / "a_events.parquet"))
+    # A byte copy of the events table: the catalog schema reads it raw
+    # (ts not yet normalized), as the stream will.
+    schema = table_schema(spark, sf_dir, "events")
+    batch = spark.read.schema(schema).parquet(str(src / "a_events.parquet"))
     sentinel_ts = batch.agg(F.max("ts").alias("m")).collect()[0]["m"]
     # ts arrives as int64 nanos (TIMESTAMP(NANOS) under nanosAsLong) or
     # as a datetime (timestamp[us] files) depending on the testdata
@@ -703,7 +582,7 @@ def st11_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             (-1, future, -1, "purchase", 0.0, "{}"),
             (-2, future, -1, "click", 0.0, "{}"),
         ],
-        batch.schema,
+        schema,
     ).coalesce(1).write.mode("overwrite").parquet(str(src / "_sentinel"))
     sent_file = next((src / "_sentinel").glob("part-*.parquet"))
     shutil.move(str(sent_file), src / "b_sentinel.parquet")
@@ -711,10 +590,8 @@ def st11_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     now = os.path.getmtime(src / "b_sentinel.parquet")
     os.utime(src / "a_events.parquet", (now - 60, now - 60))
 
-    from ..schema import normalize_events_ts
-
     stream = normalize_events_ts(
-        spark.readStream.schema(batch.schema)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
@@ -735,20 +612,9 @@ def st11_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") <= F.col("p_ts")),
         "left_outer",
     )
-    name = f"st11_{uuid.uuid4().hex[:12]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _, out = drain_to_memory(joined, "st11", "append")
     return (
-        spark.table(name)
-        .where(F.col("p_user") >= 0)
+        out.where(F.col("p_user") >= 0)
         .groupBy(F.col("p_user").alias("user_id"))
         .agg(
             F.count("c_user").cast("long").alias("n_matched"),
@@ -788,20 +654,8 @@ def st12_stream_rollup_maintenance(
     its own (day, type) partials (batch-sized), the merge touches the
     |days|x|types| rollup (MB-scale at 100 TB), and raw events are
     never rescanned."""
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
-    from ..schema import load_table
-
-    work = Path(tempfile.gettempdir()) / f"ecostream_st12_{os.getpid()}"
-    shutil.rmtree(work, ignore_errors=True)
-    work.mkdir(parents=True)
-
+    work = _fresh_workdir("st12")
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type", "value")
-    ev.repartition(4).write.parquet(str(work / "feed"))
-
     day = F.expr("CAST(floor(unix_timestamp(ts) / 86400) AS BIGINT)")
 
     def _daily(df: DataFrame) -> DataFrame:
@@ -810,46 +664,27 @@ def st12_stream_rollup_maintenance(
             F.sum(F.col("value").cast("decimal(18,2)")).alias("value_sum"),
         )
 
-    base = work / "rollup_v0"
-    # empty rollup seed with the right schema
-    _daily(ev.limit(0)).write.parquet(str(base))
-
-    schema = spark.read.parquet(str(work / "feed")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(work / "feed"))
-    )
-    state = {"cur": str(base), "v": 0}
-
-    def _merge(batch: DataFrame, _batch_id: int) -> None:
-        cur = spark.read.parquet(state["cur"])
-        merged = (
-            cur.unionByName(_daily(batch))
+    def _merge(rollup: DataFrame, batch: DataFrame) -> DataFrame:
+        return (
+            rollup.unionByName(_daily(batch))
             .groupBy("day", "event_type")
             .agg(
                 F.sum("n_events").cast("long").alias("n_events"),
-                F.sum("value_sum")
-                .cast("decimal(18,2)")
-                .alias("value_sum"),
+                F.sum("value_sum").cast("decimal(18,2)").alias("value_sum"),
             )
         )
-        state["v"] += 1
-        nxt = str(work / f"rollup_v{state['v']}")
-        merged.write.mode("overwrite").parquet(nxt)
-        state["cur"] = nxt
 
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", str(work / "ckpt"))
-        .start()
+    store = str(work / "rollup")
+    drain(
+        fold_store(
+            replay_feed(ev, work),
+            store,
+            str(work / "ckpt"),
+            _merge,
+            _daily(ev.limit(0)),  # empty rollup with the right schema
+        )
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    rollup = spark.read.parquet(state["cur"])
+    rollup = read_agg_store(spark, store)
     return (
         rollup.groupBy(
             F.expr("day div 7").cast("long").alias("week"), "event_type"
@@ -902,10 +737,9 @@ def st13_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     job silently loses rows.  Scale shape: ONE user-keyed exchange
     serves the running-max window and the aggregate (same partitioning,
     no second shuffle); lateness stays exact integer µs end to end."""
-    from ..schema import load_table
+    from pyspark.sql import Window as W
 
     ev = load_table(spark, sf_dir, "events")
-    from pyspark.sql import Window as W
 
     w = (
         W.partitionBy("user_id")
@@ -977,41 +811,23 @@ def st14_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["user_id", "event_type"]
     )
-    name = f"st14_{uuid.uuid4().hex[:12]}"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # Enforce the single-batch stream-batch-equivalence precondition:
-        # count micro-batches that actually carried rows.
-        data_batches = sum(
-            1 for p in q.recentProgress if p and p["numInputRows"] > 0
+    q, out = drain_to_memory(deduped, "st14", "append")
+    # Enforce the single-batch stream-batch-equivalence precondition:
+    # count micro-batches that actually carried rows.
+    data_batches = sum(1 for p in q.recentProgress if p and p["numInputRows"] > 0)
+    if data_batches > 1:  # pragma: no cover - single-file sf dirs
+        raise AssertionError(
+            "st14 oracle assumes a single micro-batch drain; got "
+            f"{data_batches} data-carrying batches — the COUNT("
+            "DISTINCT) oracle no longer models "
+            "dropDuplicatesWithinWatermark re-emissions"
         )
-        if data_batches > 1:  # pragma: no cover - single-file sf dirs
-            raise AssertionError(
-                "st14 oracle assumes a single micro-batch drain; got "
-                f"{data_batches} data-carrying batches — the COUNT("
-                "DISTINCT) oracle no longer models "
-                "dropDuplicatesWithinWatermark re-emissions"
-            )
-    finally:
-        q.stop()
-    from ..schema import load_table
-
     inputs = (
         load_table(spark, sf_dir, "events")
         .groupBy("event_type")
         .agg(F.count("*").cast("long").alias("n_input"))
     )
-    kept = (
-        spark.table(name)
-        .groupBy("event_type")
-        .agg(F.count("*").cast("long").alias("n_kept"))
-    )
+    kept = out.groupBy("event_type").agg(F.count("*").cast("long").alias("n_kept"))
     return (
         inputs.join(kept, "event_type")
         .select(
@@ -1053,20 +869,8 @@ def st15_stream_quantile_maintenance(
     (batch-sized); the merge touches the model-sized sketch table;
     raw events are never rescanned — the unbounded-feed form of the
     roll2 serving story."""
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
-    from ..schema import load_table
-
-    work = Path(tempfile.gettempdir()) / f"ecostream_st15_{os.getpid()}"
-    shutil.rmtree(work, ignore_errors=True)
-    work.mkdir(parents=True)
-
+    work = _fresh_workdir("st15")
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type", "value")
-    ev.repartition(4).write.parquet(str(work / "feed"))
-
     day = F.expr("CAST(floor(unix_timestamp(ts) / 86400) AS BIGINT)")
 
     def _sketch(df: DataFrame) -> DataFrame:
@@ -1077,39 +881,24 @@ def st15_stream_quantile_maintenance(
             .agg(F.count("*").cast("long").alias("n"))
         )
 
-    base = work / "sketch_v0"
-    _sketch(ev.limit(0)).write.parquet(str(base))
-
-    schema = spark.read.parquet(str(work / "feed")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(work / "feed"))
-    )
-    state = {"cur": str(base), "v": 0}
-
-    def _merge(batch: DataFrame, _batch_id: int) -> None:
-        cur = spark.read.parquet(state["cur"])
-        merged = (
-            cur.unionByName(_sketch(batch))
+    def _merge(sketch: DataFrame, batch: DataFrame) -> DataFrame:
+        return (
+            sketch.unionByName(_sketch(batch))
             .groupBy("day", "event_type", "b_lo", "ub")
             .agg(F.sum("n").cast("long").alias("n"))
         )
-        state["v"] += 1
-        nxt = str(work / f"sketch_v{state['v']}")
-        merged.write.mode("overwrite").parquet(nxt)
-        state["cur"] = nxt
 
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", str(work / "ckpt"))
-        .start()
+    store = str(work / "sketch")
+    drain(
+        fold_store(
+            replay_feed(ev, work),
+            store,
+            str(work / "ckpt"),
+            _merge,
+            _sketch(ev.limit(0)),
+        )
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return roll2_serve_weekly(spark.read.parquet(state["cur"]))
+    return roll2_serve_weekly(read_agg_store(spark, store))
 
 
 # --- ST16: streaming sufficient-statistics maintenance (round 9) ---------------
@@ -1136,19 +925,8 @@ def st16_stream_welch_maintenance(
     Scale shape: each micro-batch shuffles only its own 6 partial sums;
     the merge touches a one-row store; raw events are never rescanned —
     the st15 pattern applied to the experimentation family."""
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
-    from ..schema import load_table
-
-    work = Path(tempfile.gettempdir()) / f"ecostream_st16_{os.getpid()}"
-    shutil.rmtree(work, ignore_errors=True)
-    work.mkdir(parents=True)
-
+    work = _fresh_workdir("st16")
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
-    ev.repartition(4).write.parquet(str(work / "feed"))
 
     def _moments(df: DataFrame) -> DataFrame:
         return (
@@ -1175,45 +953,25 @@ def st16_stream_welch_maintenance(
             )
         )
 
-    base = work / "moments_v0"
-    _moments(ev.limit(0)).na.fill(0).write.parquet(str(base))
-
-    schema = spark.read.parquet(str(work / "feed")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(work / "feed"))
-    )
-    state = {"cur": str(base), "v": 0}
-
-    def _merge(batch: DataFrame, _batch_id: int) -> None:
-        cur = spark.read.parquet(state["cur"])
-        merged = (
-            cur.unionByName(_moments(batch).na.fill(0))
-            .agg(
-                F.sum("n1").cast("long").alias("n1"),
-                F.sum("s1").cast("long").alias("s1"),
-                F.sum("q1").cast("long").alias("q1"),
-                F.sum("n2").cast("long").alias("n2"),
-                F.sum("s2").cast("long").alias("s2"),
-                F.sum("q2").cast("long").alias("q2"),
+    def _merge(moments: DataFrame, batch: DataFrame) -> DataFrame:
+        return moments.unionByName(_moments(batch).na.fill(0)).agg(
+            *(
+                F.sum(c).cast("long").alias(c)
+                for c in ("n1", "s1", "q1", "n2", "s2", "q2")
             )
         )
-        state["v"] += 1
-        nxt = str(work / f"moments_v{state['v']}")
-        merged.write.mode("overwrite").parquet(nxt)
-        state["cur"] = nxt
 
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", str(work / "ckpt"))
-        .start()
+    store = str(work / "moments")
+    drain(
+        fold_store(
+            replay_feed(ev, work),
+            store,
+            str(work / "ckpt"),
+            _merge,
+            _moments(ev.limit(0)).na.fill(0),
+        )
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return welch_from_moments(spark.read.parquet(state["cur"]))
+    return welch_from_moments(read_agg_store(spark, store))
 
 
 # --- ST17: streaming distinct-sketch maintenance (round 9) ----------------------
@@ -1245,55 +1003,25 @@ def st17_stream_distinct_maintenance(
     Scale shape: each micro-batch shuffles only its own distinct
     (day, type, hash) rows; the store stays ≤ |days|·|types|·k rows;
     raw events are never rescanned."""
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
+    work = _fresh_workdir("st17")
+    ev = load_table(spark, sf_dir, "events").select("ts", "event_type", "user_id")
 
-    from ..schema import load_table
-
-    work = Path(tempfile.gettempdir()) / f"ecostream_st17_{os.getpid()}"
-    shutil.rmtree(work, ignore_errors=True)
-    work.mkdir(parents=True)
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "ts", "event_type", "user_id"
-    )
-    ev.repartition(4).write.parquet(str(work / "feed"))
-
-    base = work / "sketch_v0"
-    roll3_daily_sketch(roll3_hash_exprs(ev.limit(0))).write.parquet(
-        str(base)
-    )
-
-    schema = spark.read.parquet(str(work / "feed")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(work / "feed"))
-    )
-    state = {"cur": str(base), "v": 0}
-
-    def _merge(batch: DataFrame, _batch_id: int) -> None:
-        cur = spark.read.parquet(state["cur"])
-        merged = roll3_daily_sketch(
-            cur.unionByName(roll3_daily_sketch(roll3_hash_exprs(batch)))
+    def _merge(sketch: DataFrame, batch: DataFrame) -> DataFrame:
+        return roll3_daily_sketch(
+            sketch.unionByName(roll3_daily_sketch(roll3_hash_exprs(batch)))
         )
-        state["v"] += 1
-        nxt = str(work / f"sketch_v{state['v']}")
-        merged.write.mode("overwrite").parquet(nxt)
-        state["cur"] = nxt
 
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", str(work / "ckpt"))
-        .start()
+    store = str(work / "sketch")
+    drain(
+        fold_store(
+            replay_feed(ev, work),
+            store,
+            str(work / "ckpt"),
+            _merge,
+            roll3_daily_sketch(roll3_hash_exprs(ev.limit(0))),
+        )
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return roll3_serve_weekly(spark, state["cur"], sf_dir)
+    return roll3_serve_weekly(spark, store_version(store), sf_dir)
 
 
 # --- ST18: transformWithStateInPandas running counts (round 10) -----------------
@@ -1324,51 +1052,14 @@ def st18_tws_running_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference analog: consumer.py:119-148 (the hand-rolled TTL'd keyed
     store) — same re-spec as st2, on the successor API."""
-    import tempfile
+    from ..streaming.stateful import running_totals_tws
 
-    from ..streaming.stateful import ensure_protobuf, running_totals_tws
-
-    if not ensure_protobuf(spark):
-        raise RuntimeError(
-            "st18 needs google.protobuf (installed or vendored under "
-            "ecostream/_vendor) for the transformWithStateInPandas "
-            "driver worker"
-        )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    name = f"st18_{uuid.uuid4().hex[:12]}"
-    try:
+    ckpt = str(_fresh_workdir("st18_ckpt"))
+    with rocksdb_state_store(spark, "st18"):
         stream = events_stream(spark, sf_dir).select("event_type", "value")
-        with tempfile.TemporaryDirectory(prefix="st18_ckpt_") as ckpt:
-            q = (
-                running_totals_tws(stream)
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-                q.awaitTermination(60)
-        return (
-            spark.table(name)
-            .groupBy("event_type")
-            .agg(F.max("n").alias("n"))
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
+        totals = running_totals_tws(stream)
+        _, out = drain_to_memory(totals, "st18", "update", ckpt)
+    return out.groupBy("event_type").agg(F.max("n").alias("n"))
 
 
 # --- ST19: transformWithState event-time timer TTL expiry (round 11) ------------
@@ -1404,51 +1095,18 @@ def st19_tws_ttl_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the pure SQL predicate the oracle replays (no boundary ties in
     the testdata at any scale — verified strict vs non-strict agree).
     """
-    import tempfile
+    from ..streaming.stateful import ttl_expiry_tws
 
-    from ..streaming.stateful import ensure_protobuf, ttl_expiry_tws
-
-    if not ensure_protobuf(spark):
-        raise RuntimeError(
-            "st19 needs google.protobuf (installed or vendored under "
-            "ecostream/_vendor) for the transformWithStateInPandas "
-            "driver worker"
-        )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    name = f"st19_{uuid.uuid4().hex[:12]}"
-    try:
+    ckpt = str(_fresh_workdir("st19_ckpt"))
+    with rocksdb_state_store(spark, "st19"):
         stream = (
             events_stream(spark, sf_dir)
             .select("user_id", "ts")
             .withWatermark("ts", "30 minutes")
         )
-        with tempfile.TemporaryDirectory(prefix="st19_ckpt_") as ckpt:
-            q = (
-                ttl_expiry_tws(stream, ttl_ms=4 * 3600 * 1000)
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-                q.awaitTermination(60)
-        return spark.table(name).select("user_id", "n")
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
+        expiring = ttl_expiry_tws(stream, ttl_ms=4 * 3600 * 1000)
+        _, out = drain_to_memory(expiring, "st19", "update", ckpt)
+    return out.select("user_id", "n")
 
 
 # --- ST20: transformWithState ListState recent-K buffer (round 11) --------------
@@ -1481,51 +1139,14 @@ def st20_tws_recent_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     With st18 (ValueState), st19 (event-time timers), and st21
     (MapState) this completes the TWS typed-state surface the
     reference's keyed store maps onto."""
-    import tempfile
+    from ..streaming.stateful import recent_events_tws
 
-    from ..streaming.stateful import ensure_protobuf, recent_events_tws
-
-    if not ensure_protobuf(spark):
-        raise RuntimeError(
-            "st20 needs google.protobuf (installed or vendored under "
-            "ecostream/_vendor) for the transformWithStateInPandas "
-            "driver worker"
-        )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    name = f"st20_{uuid.uuid4().hex[:12]}"
-    try:
+    ckpt = str(_fresh_workdir("st20_ckpt"))
+    with rocksdb_state_store(spark, "st20"):
         stream = events_stream(spark, sf_dir).select("user_id", "ts")
-        with tempfile.TemporaryDirectory(prefix="st20_ckpt_") as ckpt:
-            q = (
-                recent_events_tws(stream, k=5)
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-                q.awaitTermination(60)
-        return (
-            spark.table(name)
-            .groupBy("user_id", "rk")
-            .agg(F.max("ts_us").alias("ts_us"))
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
+        recent = recent_events_tws(stream, k=5)
+        _, out = drain_to_memory(recent, "st20", "update", ckpt)
+    return out.groupBy("user_id", "rk").agg(F.max("ts_us").alias("ts_us"))
 
 
 # --- ST21: transformWithState MapState daily counters (round 11) ----------------
@@ -1550,51 +1171,15 @@ def st21_tws_daily_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     and emits the current (n_days, n_total); both are monotone across
     batches, so the final max-slice equals the batch aggregate the
     oracle computes directly."""
-    import tempfile
+    from ..streaming.stateful import daily_map_tws
 
-    from ..streaming.stateful import daily_map_tws, ensure_protobuf
-
-    if not ensure_protobuf(spark):
-        raise RuntimeError(
-            "st21 needs google.protobuf (installed or vendored under "
-            "ecostream/_vendor) for the transformWithStateInPandas "
-            "driver worker"
-        )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    name = f"st21_{uuid.uuid4().hex[:12]}"
-    try:
+    ckpt = str(_fresh_workdir("st21_ckpt"))
+    with rocksdb_state_store(spark, "st21"):
         stream = events_stream(spark, sf_dir).select("event_type", "ts")
-        with tempfile.TemporaryDirectory(prefix="st21_ckpt_") as ckpt:
-            q = (
-                daily_map_tws(stream)
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-                q.awaitTermination(60)
-        return (
-            spark.table(name)
-            .groupBy("event_type")
-            .agg(F.max("n_days").alias("n_days"), F.max("n").alias("n"))
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
+        _, out = drain_to_memory(daily_map_tws(stream), "st21", "update", ckpt)
+    return out.groupBy("event_type").agg(
+        F.max("n_days").alias("n_days"), F.max("n").alias("n")
+    )
 
 
 # --- ST22: streaming CMS-store maintenance (round 11) ---------------------------
@@ -1672,31 +1257,13 @@ def st22_stream_cms_maintenance(
     partials plus grid-sized rows; the stores stay
     |days|x{d}x{w} + |daily active users| and raw events are never
     rescanned."""
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
-    from ..schema import load_table
-
-    work = Path(tempfile.gettempdir()) / f"ecostream_st22_{os.getpid()}"
-    shutil.rmtree(work, ignore_errors=True)
-    work.mkdir(parents=True)
-
+    work = _fresh_workdir("st22")
     ev = load_table(spark, sf_dir, "events").select("ts", "user_id")
-    ev.repartition(4).write.parquet(str(work / "feed"))
-
     grid0 = work / "grid_v0"
     cnt0 = work / "cnt_v0"
     roll4_daily_grid(roll4_daily_counts(ev.limit(0))).write.parquet(str(grid0))
     roll4_daily_counts(ev.limit(0)).write.parquet(str(cnt0))
 
-    schema = spark.read.parquet(str(work / "feed")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(work / "feed"))
-    )
     # Store versions are keyed by BATCH ID, and version b is always
     # derived from version b-1 (never from a mutable "latest" pointer):
     # a retried micro-batch (task/epoch failure) re-reads the untouched
@@ -1716,25 +1283,15 @@ def st22_stream_cms_maintenance(
         st22_apply_batch(spark, _vpaths(batch_id - 1), _vpaths(batch_id), batch)
         state["last"] = max(state["last"], batch_id)
 
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", str(work / "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        fg, fc = _vpaths(state["last"])
-        # Materialize the (store-sized) serve before the workdir is
-        # deleted — the caller collects lazily, after the finally runs.
-        return roll4_serve_weekly(
-            spark.read.parquet(fg),
-            roll4_daily_top(spark.read.parquet(fc)),
-        ).localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    drain(
+        replay_feed(ev, work)
+        .writeStream.foreachBatch(_merge)
+        .option("checkpointLocation", str(work / "ckpt"))
+    )
+    fg, fc = _vpaths(state["last"])
+    return roll4_serve_weekly(
+        spark.read.parquet(fg), roll4_daily_top(spark.read.parquet(fc))
+    )
 
 
 from .storage_queries import (  # noqa: E402
@@ -1803,53 +1360,18 @@ def st23_tws_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     RocksDB index, and closing cost is per FIRED timer — never a scan
     of live keys (the property that makes engine-owned session windows
     viable at 100 TB key cardinality)."""
-    import tempfile
+    from ..streaming.stateful import session_windows_tws
 
-    from ..streaming.stateful import ensure_protobuf, session_windows_tws
-
-    if not ensure_protobuf(spark):
-        raise RuntimeError(
-            "st23 needs google.protobuf (installed or vendored under "
-            "ecostream/_vendor) for the transformWithStateInPandas "
-            "driver worker"
-        )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    name = f"st23_{uuid.uuid4().hex[:12]}"
-    try:
+    ckpt = str(_fresh_workdir("st23_ckpt"))
+    with rocksdb_state_store(spark, "st23"):
         stream = (
             events_stream(spark, sf_dir)
             .select("user_id", "ts")
             .withWatermark("ts", "30 minutes")
         )
-        with tempfile.TemporaryDirectory(prefix="st23_ckpt_") as ckpt:
-            q = (
-                session_windows_tws(stream, gap_ms=30 * 60 * 1000)
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-                q.awaitTermination(60)
-        return spark.table(name).select(
-            "user_id", "start_us", "end_us", "n_events"
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
+        sessions = session_windows_tws(stream, gap_ms=30 * 60 * 1000)
+        _, out = drain_to_memory(sessions, "st23", "update", ckpt)
+    return out.select("user_id", "start_us", "end_us", "n_events")
 
 
 # --- ST24: transformWithState NATIVE (declarative) state TTL (round 12) ---------
@@ -1901,43 +1423,18 @@ def st24_tws_native_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference analog: consumer.py:119-148 (TTL purge loop), SURVEY §2.10
     T3/T5."""
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
+    import time
+    import uuid
 
-    from ..schema import load_table
-    from ..streaming.stateful import ensure_protobuf, native_ttl_counts_tws
+    from ..streaming.stateful import native_ttl_counts_tws
 
-    if not ensure_protobuf(spark):
-        raise RuntimeError(
-            "st24 needs google.protobuf (installed or vendored under "
-            "ecostream/_vendor) for the transformWithStateInPandas "
-            "driver worker"
-        )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    work = Path(tempfile.gettempdir()) / f"ecostream_st24_{os.getpid()}"
-    shutil.rmtree(work, ignore_errors=True)
-    work.mkdir(parents=True)
-    try:
+    work = _fresh_workdir("st24")
+    with rocksdb_state_store(spark, "st24"):
         ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
-        ev.repartition(4).write.parquet(str(work / "feed"))
-        n_feed = spark.read.parquet(str(work / "feed")).count()
-        schema = spark.read.parquet(str(work / "feed")).schema
+        n_feed = ev.count()
+        stream = replay_feed(ev, work)
 
         def _run(leg: str, ttl_ms: int) -> DataFrame:
-            import time
-
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(str(work / "feed"))
-            )
             name = f"st24_{leg}_{uuid.uuid4().hex[:12]}"
             q = (
                 native_ttl_counts_tws(stream, ttl_ms=ttl_ms)
@@ -1976,7 +1473,6 @@ def st24_tws_native_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
             finally:
                 q.stop()
-                q.awaitTermination(60)
             return spark.table(name)
 
         live = (
@@ -1989,19 +1485,8 @@ def st24_tws_native_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("user_id")
             .agg(F.sum("n").cast("long").alias("n_relapsed"))
         )
-        # Materialize (per-user rows) before the workdir is deleted —
-        # the caller collects lazily, after the finally runs.
-        return (
-            live.join(relapsed, "user_id")
-            .select("user_id", "n_live", "n_relapsed")
-            .orderBy("user_id")
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
+    return (
+        live.join(relapsed, "user_id")
+        .select("user_id", "n_live", "n_relapsed")
+        .orderBy("user_id")
+    )

@@ -1,10 +1,10 @@
 """Structured Streaming layer (SURVEY §2.1 S1-S4, §2.10 T1-T3, T6-T7)."""
 
 from .ingest import (  # noqa: F401
-    file_stream_source,
+    drain,
+    drain_to_memory,
     kafka_sink,
     kafka_source,
-    start_memory_sink,
     store_with_ttl,
     windowed_counts,
 )

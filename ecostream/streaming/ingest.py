@@ -15,18 +15,30 @@ Structured Streaming:
   the reference, it prunes *every* index (the reference leaks 3 of 7).
 - Checkpointing gives exactly-once state (T7) vs the reference's
   at-least-once consume with swallowed errors.
+
+This module also owns the lifecycle every declared ``st*`` query
+shares, so no query copies it: ``drain``/``drain_to_memory`` (start →
+``processAllAvailable`` → stop), ``rocksdb_state_store`` (the TWS
+provider conf, restored on exit), ``replay_feed`` (a table replayed as
+a multi-batch file stream) and ``fold_store`` (a batch-id-versioned,
+replay-safe ``foreachBatch`` store).
 """
 
 from __future__ import annotations
 
 import shutil
+import uuid
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from datetime import datetime, timedelta
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..schema import INSECT_EVENT_SCHEMA, parse_event_ts
+from .stateful import ensure_protobuf
 
 KAFKA_TOPIC = "insect-events"  # producer.py:52
 KAFKA_BOOTSTRAP = "localhost:9092"  # producer.py:35 / consumer.py:14
@@ -78,15 +90,6 @@ def kafka_sink(
     )
 
 
-def file_stream_source(
-    spark: SparkSession, path: str, schema, ts_col: str = "ts"
-) -> DataFrame:
-    """CI-safe stream source: parquet directory tailing with an explicit
-    schema (no inference in streaming).  Used by the stream-batch
-    equivalence tests over the driver's events table."""
-    return spark.readStream.schema(schema).parquet(path)
-
-
 def windowed_counts(
     events: DataFrame,
     ts_col: str = "event_ts",
@@ -110,14 +113,79 @@ def windowed_counts(
     )
 
 
-def start_memory_sink(df: DataFrame, name: str, output_mode: str = "update"):
-    """T6: queryable live state — memory sink + ``spark.sql`` replaces
-    the reference's pickle-over-socket snapshot queries."""
+def drain(writer: DataStreamWriter) -> StreamingQuery:
+    """Start ``writer``, process all input available now, and stop the
+    query — also when the drain raises (a failed ``foreachBatch``
+    surfaces here as a ``StreamingQueryException``).  Returns the
+    stopped query; its ``recentProgress`` stays readable.
+
+    A bounded source drained this way equals the batch computation over
+    the same data — the stream-batch equivalence every declared
+    streaming query's oracle relies on."""
+    q = writer.start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return q
+
+
+def drain_to_memory(
+    df: DataFrame, prefix: str, output_mode: str, checkpoint: str | None = None
+) -> tuple[StreamingQuery, DataFrame]:
+    """T6: queryable live state — ``drain`` ``df`` into a memory sink
+    under a fresh ``<prefix>_<uuid>`` name; returns the stopped query
+    and the sink as a table (``spark.sql`` over it replaces the
+    reference's pickle-over-socket snapshot queries)."""
+    name = f"{prefix}_{uuid.uuid4().hex[:12]}"
+    writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    return drain(writer), df.sparkSession.table(name)
+
+
+PROVIDER_CLASS = "spark.sql.streaming.stateStore.providerClass"
+ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+
+
+@contextmanager
+def rocksdb_state_store(spark: SparkSession, who: str) -> Iterator[None]:
+    """Run the body on the RocksDB state store — the only provider that
+    supports ``transformWithStateInPandas`` — and restore the session's
+    prior provider on exit, also when the body raises.  Raises
+    RuntimeError up front when ``google.protobuf``, which the TWS driver
+    worker imports, is neither installed nor vendored."""
+    if not ensure_protobuf(spark):
+        raise RuntimeError(
+            f"{who} needs google.protobuf (installed or vendored under "
+            "ecostream/_vendor) for the transformWithStateInPandas "
+            "driver worker"
+        )
+    prev = spark.conf.get(PROVIDER_CLASS, None)
+    spark.conf.set(PROVIDER_CLASS, ROCKSDB_PROVIDER)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(PROVIDER_CLASS)
+        else:
+            spark.conf.set(PROVIDER_CLASS, prev)
+
+
+def replay_feed(df: DataFrame, work: str | Path) -> DataFrame:
+    """Write ``df`` as a 4-file parquet feed under ``<work>/feed`` and
+    return a file stream that replays it one file per micro-batch
+    (``maxFilesPerTrigger=1`` → up to 4 batches).  The stream reads
+    with ``df.schema`` — the schema just written — so no inference job
+    runs; the file source forces every field nullable either way."""
+    path = f"{work}/feed"
+    df.repartition(4).write.mode("overwrite").parquet(path)
     return (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .start()
+        df.sparkSession.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(path)
     )
 
 
@@ -172,92 +240,105 @@ def store_with_ttl(
     )
 
 
+def _versions(store: Path) -> list[int]:
+    return sorted(int(p.name.split("=", 1)[1]) for p in store.glob("v=*"))
+
+
+def fold_store(
+    stream: DataFrame,
+    store_dir: str,
+    checkpoint: str,
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+    initial: DataFrame,
+) -> DataStreamWriter:
+    """A versioned store maintained by folding each micro-batch into it:
+    version ``v=<batch_id>`` is ``merge(base, batch)``, where ``base``
+    is the newest version STRICTLY OLDER than ``batch_id`` (``initial``
+    before the first one).  Each write goes to a new version directory
+    and older versions are retired afterwards (versioned swap ≙ poor
+    man's ACID — never overwrite what you are reading; at real scale
+    this exact loop is a Delta/Iceberg ``MERGE INTO`` and the versioning
+    comes from the table format).
+
+    Idempotent under foreachBatch's at-least-once replay: a
+    pre-existing ``v=<batch_id>`` (a replayed or partially written
+    attempt) is discarded and rebuilt from the pre-batch base, so
+    re-running a batch after a mid-write crash produces the same store,
+    never a double-applied batch — the standard idempotent foreachBatch
+    write pattern (batch_id as the version key).  ``read_agg_store``
+    reads the newest version."""
+    store = Path(store_dir)
+
+    def _fold(batch: DataFrame, batch_id: int) -> None:
+        versions = _versions(store)
+        if batch_id in versions:
+            shutil.rmtree(store / f"v={batch_id}", ignore_errors=True)
+        versions = [v for v in versions if v < batch_id]
+        base = (
+            batch.sparkSession.read.parquet(str(store / f"v={versions[-1]}"))
+            if versions
+            else initial
+        )
+        merge(base, batch).write.mode("overwrite").parquet(
+            str(store / f"v={batch_id}")
+        )
+        for v in versions[:-1]:  # keep previous version for readers mid-swap
+            shutil.rmtree(store / f"v={v}", ignore_errors=True)
+
+    return stream.writeStream.foreachBatch(_fold).option(
+        "checkpointLocation", checkpoint
+    )
+
+
 def incremental_agg_store(
     events: DataFrame,
     store_dir: str,
     checkpoint: str,
     key_col: str = "event_type",
     value_col: str = "value",
-):
+) -> DataStreamWriter:
     """Incremental materialized-view maintenance: a per-key aggregate
     (count + DECIMAL sum) kept up to date by merging each micro-batch's
     partial aggregate into the stored totals — the streaming upsert the
     reference's counter dicts (consumer.py:32-48) approximate in memory.
 
-    Each batch: aggregate the batch (tiny — |keys| rows), full-outer
-    merge with the current stored totals, write a new version directory
-    ``v=<n>`` and retire older versions (versioned swap ≙ poor-man's
-    ACID; at real scale this exact loop is Delta/Iceberg ``MERGE INTO``
-    and the versioning comes from the table format).  Merge cost is
-    O(|keys|) per batch, never a rescan of history.
+    A ``fold_store`` whose merge aggregates the batch (tiny — |keys|
+    rows) and full-outer joins it with the stored totals, so merge cost
+    is O(|keys|) per batch, never a rescan of history.  Sums add like
+    SQL ``sum``: a side that is NULL (absent key, or all-NULL values)
+    contributes nothing."""
+    dec = "decimal(18,2)"
 
-    Idempotent under foreachBatch's at-least-once replay: the merge
-    base is always the newest version STRICTLY OLDER than ``batch_id``,
-    and a pre-existing ``v=<batch_id>`` (a replayed or partially
-    written attempt) is discarded and rebuilt — so re-running a batch
-    after a mid-write crash produces the same totals, never a
-    double-count.  This is the standard idempotent foreachBatch write
-    pattern (batch_id as the version key).
-    """
-    from pathlib import Path
+    def _add(a: str, b: str) -> F.Column:
+        return F.coalesce(F.col(a) + F.col(b), F.col(a), F.col(b))
 
-    store = Path(store_dir)
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        delta = batch_df.groupBy(key_col).agg(
+    def _merge(store: DataFrame, batch: DataFrame) -> DataFrame:
+        delta = batch.groupBy(key_col).agg(
             F.count("*").alias("d_cnt"),
-            F.sum(F.col(value_col).cast("decimal(18,2)")).alias("d_sum"),
+            F.sum(F.col(value_col).cast(dec)).alias("d_sum"),
         )
-        versions = sorted(
-            int(p.name.split("=", 1)[1]) for p in store.glob("v=*")
+        return store.join(delta, key_col, "full_outer").select(
+            key_col,
+            _add("cnt", "d_cnt").alias("cnt"),
+            _add("total", "d_sum").cast(dec).alias("total"),
         )
-        if batch_id in versions:
-            # at-least-once replay (or partial write from a crash):
-            # rebuild deterministically from the pre-batch base.
-            shutil.rmtree(store / f"v={batch_id}", ignore_errors=True)
-        versions = [v for v in versions if v < batch_id]
-        if versions:
-            cur = spark.read.parquet(str(store / f"v={versions[-1]}"))
-            merged = (
-                cur.join(delta, key_col, "full_outer")
-                .select(
-                    key_col,
-                    (
-                        F.coalesce("cnt", F.lit(0))
-                        + F.coalesce("d_cnt", F.lit(0))
-                    ).alias("cnt"),
-                    (
-                        F.coalesce(F.col("total"), F.lit(0).cast("decimal(18,2)"))
-                        + F.coalesce(F.col("d_sum"), F.lit(0).cast("decimal(18,2)"))
-                    ).cast("decimal(18,2)").alias("total"),
-                )
-            )
-        else:
-            merged = delta.select(
-                key_col,
-                F.col("d_cnt").alias("cnt"),
-                F.col("d_sum").cast("decimal(18,2)").alias("total"),
-            )
-        merged.write.mode("overwrite").parquet(str(store / f"v={batch_id}"))
-        for v in versions[:-1]:  # keep previous version for readers mid-swap
-            shutil.rmtree(store / f"v={v}", ignore_errors=True)
 
-    return (
-        events.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
+    initial = events.sparkSession.createDataFrame(
+        [], f"`{key_col}` {events.schema[key_col].dataType.simpleString()},"
+        f" cnt bigint, total {dec}"
     )
+    return fold_store(events, store_dir, checkpoint, _merge, initial)
+
+
+def store_version(store_dir: str) -> str:
+    """Path of the newest version of a ``fold_store``."""
+    versions = _versions(Path(store_dir))
+    if not versions:
+        raise FileNotFoundError(f"no versions in {store_dir}")
+    return f"{store_dir}/v={versions[-1]}"
 
 
 def read_agg_store(spark, store_dir: str) -> DataFrame:
-    """Read the latest version of an ``incremental_agg_store``."""
-    from pathlib import Path
-
-    versions = sorted(
-        int(p.name.split("=", 1)[1]) for p in Path(store_dir).glob("v=*")
-    )
-    if not versions:
-        raise FileNotFoundError(f"no versions in {store_dir}")
-    return spark.read.parquet(f"{store_dir}/v={versions[-1]}")
+    """Read the newest version of a ``fold_store`` (such as an
+    ``incremental_agg_store``)."""
+    return spark.read.parquet(store_version(store_dir))
